@@ -126,19 +126,19 @@ def generate_and_run_sql(
 
 # --- B4: agentic retriever ----------------------------------------------------
 
-def agentic_retrieve(
+def agentic_context(
     triples: DataFrame,
     node_names: DataFrame,          # (node_id, name)
     llm: LLM,
     question: str,
     max_iterations: int = 3,
     link_top_k: int = 1,
-) -> DataFrame:
+) -> list[str]:
     """B4: the agentic loop. Each round: the LLM proposes entity mentions
     (newline-separated) from the question + accumulated context; mentions are
     fuzzy-linked to graph nodes (J16); their one-hop triplets (J12) are
     merge-verbalized (A8) into context lines. Stops on ``FINISH`` or when a
-    round adds nothing new. Returns (pos, context) ordered-deduped context —
+    round adds nothing new. Returns the ordered-deduped context lines —
     first occurrence wins, as in ``byokg_query_engine.py:101-116``."""
     spark = triples.sparkSession
     context: list[str] = []   # ordered, deduped driver-side (≤ dozens of lines)
@@ -170,11 +170,34 @@ def agentic_retrieve(
         context.extend(new)
         seen.update(new)
 
+    return context
+
+
+def context_table(spark: SparkSession, lines: list[str]) -> DataFrame:
+    """(pos, context) literal table of ordered context lines."""
     return lit_table(
         spark, "pos bigint, context string",
-        [{"pos": i, "context": c} for i, c in enumerate(context)]
+        [{"pos": i, "context": c} for i, c in enumerate(lines)]
         or [{"pos": -1, "context": ""}],
     ).filter(F.col("pos") >= 0)
+
+
+def agentic_retrieve(
+    triples: DataFrame,
+    node_names: DataFrame,          # (node_id, name)
+    llm: LLM,
+    question: str,
+    max_iterations: int = 3,
+    link_top_k: int = 1,
+) -> DataFrame:
+    """B4 as a (pos, context) table: ``agentic_context``'s lines in order."""
+    return context_table(
+        triples.sparkSession,
+        agentic_context(
+            triples, node_names, llm, question,
+            max_iterations=max_iterations, link_top_k=link_top_k,
+        ),
+    )
 
 
 # --- B5: scoring retriever ----------------------------------------------------

@@ -108,13 +108,23 @@ class LexicalGraphQueryEngine:
         graph: SparkGraphTables,
         config: RetrievalConfig | None = None,
         llm: LLM | None = None,
-        retriever: Callable[[SparkGraphTables, str, RetrievalConfig], DataFrame]
+        retriever: Callable[[SparkGraphTables, list[float], RetrievalConfig], DataFrame]
         | None = None,
     ) -> None:
         self.graph = graph
         self.config = config or RetrievalConfig()
         self.llm = llm or _concat_answer_llm
         self._retriever = retriever
+        self._dim: int | None = None
+
+    @property
+    def embed_dim(self) -> int:
+        """Width of the graph's chunk embeddings, read on first use and
+        reused by every later question (not in ``__init__``: reading it
+        runs a Spark job)."""
+        if self._dim is None:
+            self._dim = _embed_dim(self.graph)
+        return self._dim
 
     @classmethod
     def for_traversal_based_search(
@@ -148,9 +158,8 @@ class LexicalGraphQueryEngine:
         )
 
         def retrieve(
-            g: SparkGraphTables, query_text: str, cfg: RetrievalConfig
+            g: SparkGraphTables, qvec: list[float], cfg: RetrievalConfig
         ) -> DataFrame:
-            qvec = pseudo_embedding(query_text, _embed_dim(g))
             seeds = chunk_beam_search(
                 g, qvec, seed_top_k=cfg.vss_top_k,
                 beam_width=beam_width, max_depth=max_depth,
@@ -162,17 +171,15 @@ class LexicalGraphQueryEngine:
 
     def retrieve(self, query_text: str) -> DataFrame:
         """Nested SearchResult rows for the query (no LLM)."""
+        qvec = pseudo_embedding(query_text, self.embed_dim)
         if self._retriever is None:
             return query_engine.chunk_based_search(
-                self.graph,
-                query_text,
-                self.config,
-                query_vector=pseudo_embedding(query_text, _embed_dim(self.graph)),
+                self.graph, query_text, self.config, query_vector=qvec
             )
         from graphrag_toolkit_spark.operators import processors as P
         from graphrag_toolkit_spark.operators.rollup import nest_results
 
-        flat = self._retriever(self.graph, query_text, self.config)
+        flat = self._retriever(self.graph, qvec, self.config)
         flat = P.dedup_results(flat)
         flat = P.rescore_results(flat)
         flat = P.truncate_statements(self.config.max_statements_per_topic)(flat)
@@ -244,11 +251,10 @@ class ByoKGQueryEngine:
         self.max_iterations = max_iterations
         self.link_top_k = link_top_k
 
-    def retrieve(self, question: str) -> DataFrame:
-        """(pos, context) ordered-deduped verbalized triplet lines."""
-        from graphrag_toolkit_spark.agentic import agentic_retrieve
+    def _context_lines(self, question: str) -> list[str]:
+        from graphrag_toolkit_spark.agentic import agentic_context
 
-        return agentic_retrieve(
+        return agentic_context(
             self.triples,
             self.node_names,
             self.llm,
@@ -257,15 +263,27 @@ class ByoKGQueryEngine:
             link_top_k=self.link_top_k,
         )
 
+    def retrieve(self, question: str) -> DataFrame:
+        """(pos, context) ordered-deduped verbalized triplet lines."""
+        from graphrag_toolkit_spark.agentic import context_table
+
+        return context_table(
+            self.triples.sparkSession, self._context_lines(question)
+        )
+
     def query(self, question: str) -> tuple[str, DataFrame]:
-        context = self.retrieve(question)
-        lines = [r["context"] for r in context.orderBy("pos").collect()]
+        """Answer over the loop's context lines, rendered from the ordered
+        list the loop built on the driver (no Spark round trip), plus the
+        same lines as a (pos, context) table."""
+        from graphrag_toolkit_spark.agentic import context_table
+
+        lines = self._context_lines(question)
         answer = self.answer_llm(
             "Answer the question from the context triples.\n"
             f"<question>\n{question}\n</question>\n"
             "<context>\n" + "\n".join(lines) + "\n</context>"
         )
-        return answer, context
+        return answer, context_table(self.triples.sparkSession, lines)
 
 
 class CorpusPipeline:

@@ -3,8 +3,17 @@
 The reference applies an ordered list of processors to the nested
 SearchResultCollection (``traversal_based_base_retriever.py:24-46``). Here
 every processor is a ``DataFrame -> DataFrame`` over the FLAT statement rows
-(see ``rollup.py`` for the flat-then-nest rationale), so the whole chain
-fuses into one Catalyst plan — no materialization between steps.
+(see ``rollup.py`` for the flat-then-nest rationale).
+
+Where a question's lineage is cut: the chain's input is the question's
+statement pool, which ``rollup.scored_statement_context`` returns already
+materialized (~``intermediate_limit`` rows). No action or checkpoint in the
+chain re-runs the VSS scan, the top-k window or the edge joins above it.
+The processors that read their input twice (``rescore_results``,
+``truncate_results``, ``prune_statements``, ``prune_results``) still
+``localCheckpoint`` it: without those cuts each of their legs re-plans the
+processors before it, and the fan-out compounds down the chain (more than
+twice the Spark jobs per question).
 
 Flat row contract: columns at least
 ``source_id, topic_id, topic, chunk_id, statement_id, value, details, facts,

@@ -24,11 +24,25 @@ from graphrag_toolkit_spark.operators.traversal import statement_facts, statemen
 
 def scored_statement_context(g: SparkGraphTables, statement_ids: DataFrame) -> DataFrame:
     """J2+J3+A2 combined: flat statement rows with (topic, chunk, source)
-    context, supporting facts (sorted), and fact-count score."""
+    context, supporting facts (sorted), and fact-count score.
+
+    Contract: ``statement_ids`` is a question's bounded pool — J1
+    (``chunk_to_statements``) has already applied ``intermediate_limit`` —
+    and the output is returned MATERIALIZED (``localCheckpoint(eager=True)``).
+    This is where a question's lineage is cut: every action and checkpoint
+    in the processor chain downstream (dedup, TF-IDF rerank, prune,
+    rescore, truncates, nesting) reads these ~``intermediate_limit`` rows
+    instead of re-planning and re-running the VSS scan, the top-k window
+    and the edge joins above them. Do not hand it an unbounded id set."""
     ctx = statements_to_context(g, statement_ids)
     fac = statement_facts(g, statement_ids)
-    return ctx.join(fac, "statement_id", "left").fillna(0.0, subset=["score"]).withColumn(
-        "facts", F.coalesce(F.col("facts"), F.array().cast("array<string>"))
+    return (
+        ctx.join(fac, "statement_id", "left")
+        .fillna(0.0, subset=["score"])
+        .withColumn(
+            "facts", F.coalesce(F.col("facts"), F.array().cast("array<string>"))
+        )
+        .localCheckpoint(eager=True)
     )
 
 

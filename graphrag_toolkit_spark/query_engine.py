@@ -4,10 +4,14 @@
 Pipeline, matching the reference's query flow without any LLM/service stage:
 
   chunk VSS seeds (V1+V3, exact cosine + diversity)
-    → J1 chunk→statements
-    → J2/J3/A2 scored statement context
-    → processor chain: dedup (A5) → tfidf rerank (V5) → prune (T5)
-      → rescore (A6) → truncate per topic (T2) → truncate results (T3)
+    → J1 chunk→statements (bounded by ``intermediate_limit``)
+    → J2/J3/A2 scored statement context, MATERIALIZED: the question's
+      statement pool is checkpointed here, once, so nothing downstream
+      re-runs the seed scan and edge joins
+    → processor chain over the pool: dedup (A5) → tfidf rerank (V5)
+      → prune (T5) → rescore (A6) → truncate per topic (T2)
+      → truncate results (T3); processors that read their input twice
+      checkpoint it to stop fan-out inside the chain
     → nested SearchResult rows (A1)
 
 Fully deterministic — the correctness suite runs it against golden

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from graphrag_toolkit_spark import api, fixtures
 from graphrag_toolkit_spark.api import (
     ByoKGQueryEngine,
     LexicalGraphIndex,
@@ -115,6 +116,73 @@ class TestLexicalGraphQueryEngine:
         assert {"source_id", "score", "topics"} <= set(rows[0].asDict())
 
 
+class TestQuestionLineage:
+    """A question's statement pool is materialized once: the processor
+    chain reads ~``intermediate_limit`` checkpointed rows instead of
+    re-running the VSS → J1 → J2/J3 lineage once per consumer."""
+
+    # Spark jobs of one traversal question on t1 (seed 42), engine fresh.
+    # Measured 49 with the pool checkpoint; 69 when every action in the
+    # chain re-ran the seed scan and edge joins.
+    MAX_TRAVERSAL_JOBS = 49
+
+    @pytest.fixture(scope="class")
+    def t1(self, spark):
+        return fixtures.generate("t1", seed=42).to_spark(spark)
+
+    def test_traversal_question_job_count(self, spark, t1):
+        sc = spark.sparkContext
+        group = "test-question-lineage"
+        eng = LexicalGraphQueryEngine.for_traversal_based_search(t1)
+        sc.setJobGroup(group, "one traversal question")
+        try:
+            resp = eng.query("alpha beta")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert resp.metadata["num_results"] > 0
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < n_jobs <= self.MAX_TRAVERSAL_JOBS
+
+    def test_scored_statement_context_is_the_join_materialized(self, spark, t1):
+        from pyspark.sql import functions as F
+
+        from graphrag_toolkit_spark.operators.rollup import scored_statement_context
+        from graphrag_toolkit_spark.operators.traversal import (
+            statement_facts, statements_to_context,
+        )
+
+        ids = t1.statements.select("statement_id").orderBy("statement_id").limit(50)
+        pool = scored_statement_context(t1, ids)
+        lazy = (
+            statements_to_context(t1, ids)
+            .join(statement_facts(t1, ids), "statement_id", "left")
+            .fillna(0.0, subset=["score"])
+            .withColumn(
+                "facts",
+                F.coalesce(F.col("facts"), F.array().cast("array<string>")),
+            )
+        )
+        assert pool.schema == lazy.schema
+        rows = sorted(map(str, pool.collect()))
+        assert rows and rows == sorted(map(str, lazy.collect()))
+        # already materialized: no join (or scan of the graph) left to plan
+        assert "Join" not in pool._jdf.queryExecution().optimizedPlan().toString()
+
+    def test_embed_dim_read_once_per_engine(self, t1, monkeypatch):
+        calls = []
+        real = api._embed_dim
+        monkeypatch.setattr(
+            api, "_embed_dim", lambda g: calls.append(g) or real(g)
+        )
+        eng = LexicalGraphQueryEngine.for_semantic_guided_search(
+            t1, beam_width=5, max_depth=2
+        )
+        assert calls == []  # not at construction
+        eng.retrieve("alpha beta")
+        eng.retrieve("gamma delta")
+        assert len(calls) == 1
+
+
 class TestByoKGQueryEngine:
     @pytest.fixture(scope="class")
     def kg(self, spark):
@@ -147,6 +215,47 @@ class TestByoKGQueryEngine:
         assert any("capital_of" in line for line in lines)
         # final call is generation over the accumulated context
         assert "<context>" in calls[-1]
+
+    def test_query_prompt_lists_retrieve_lines_in_pos_order(self, spark):
+        # two rounds: paris's lines, then france's — pos order is NOT the
+        # sorted order of the lines
+        triples = spark.createDataFrame(
+            [("paris", "capital_of", "france"), ("paris", "located_in", "europe"),
+             ("france", "member_of", "eu"), ("berlin", "capital_of", "germany")],
+            ["src", "rel", "dst"],
+        )
+        names = spark.createDataFrame(
+            [{"node_id": "paris", "name": "Paris"},
+             {"node_id": "france", "name": "France"}]
+        )
+        prompts: list[str] = []
+
+        def llm(p: str) -> str:
+            if "<context>" in p:
+                prompts.append(p)
+                return "ANSWER"
+            if "member_of" in p:
+                return "FINISH"
+            if "capital_of" in p:
+                return "France"
+            return "Paris"
+
+        eng = ByoKGQueryEngine(triples, names, llm)
+        question = "Which union is the country Paris is the capital of in?"
+        expected = [
+            r["context"] for r in eng.retrieve(question).orderBy("pos").collect()
+        ]
+        answer, context = eng.query(question)
+        assert answer == "ANSWER" and len(prompts) == 1
+        listed = prompts[0].split("<context>\n", 1)[1].split("\n</context>", 1)[0]
+        assert listed.split("\n") == expected
+        assert expected == [
+            "paris capital_of: france", "paris located_in: europe",
+            "france member_of: eu",
+        ]
+        assert [
+            r["context"] for r in context.orderBy("pos").collect()
+        ] == expected
 
 
 class TestCorpusPipeline:
